@@ -248,14 +248,6 @@ def number_word_steps() -> list[tuple[str, str]]:
     return [(_word_pattern(w), d) for w, d in NUMBER_WORDS]
 
 
-def number_words_to_digits(text: Column) -> Column:
-    """Word→digit replacement chain (reference cleaners.py:145-158)."""
-    out = text
-    for pat, repl in number_word_steps():
-        out = F.regexp_replace(out, pat, repl)
-    return out
-
-
 def clean_pipeline_steps() -> list[tuple[str, str]]:
     """The full TextCleaner.clean(aggressive=True) regex chain
     (reference cleaners.py:78-103), one (pattern, replacement) list that

@@ -29,8 +29,7 @@ extension surface alongside functions/zorder.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 def xy2d_py(bits: int, x: int, y: int) -> int:
@@ -50,18 +49,6 @@ def xy2d_py(bits: int, x: int, y: int) -> int:
             x, y = y, x
         s >>= 1
     return d
-
-
-def _quadrant(rx: Column, ry: Column) -> Column:
-    """(3*rx) XOR ry for rx, ry in {0, 1} — written as a CASE so the
-    same arithmetic-only form works verbatim in the SQL twin."""
-    return (
-        F.when(ry == 0, 3 * rx)
-        .when(rx == 0, F.lit(1))
-        .otherwise(F.lit(2))
-    )
-
-
 
 
 def with_hilbert(

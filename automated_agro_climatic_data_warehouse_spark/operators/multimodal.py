@@ -56,14 +56,6 @@ def _fake_decode(payload: bytes) -> list[float]:
     ]
 
 
-def decode_real(payload: bytes, media_type: str):  # pragma: no cover
-    """Real decode — requires codec libs absent from this container."""
-    raise NotImplementedError(
-        f"no codec for {media_type} in this environment; "
-        "_fake_decode provides the deterministic test path"
-    )
-
-
 def extract_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 

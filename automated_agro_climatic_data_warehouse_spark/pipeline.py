@@ -11,12 +11,15 @@ small append-only parquet; the MV refresh is an overwrite write.
 
 from __future__ import annotations
 
+import datetime as dt
 import time
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .sources import local_frame
 
 
 def mint_batch_id(pipeline: str, now: float | None = None) -> str:
@@ -50,8 +53,7 @@ class PipelineRunner:
 
     def _audit(self, batch_id: str, phase: str, status: str, n: int,
                err: str | None, t0: float) -> None:
-        import datetime as dt
-
+        # timezone-aware UTC: the instant is right whatever the process TZ
         self._audit_rows.append(
             (
                 batch_id,
@@ -59,8 +61,8 @@ class PipelineRunner:
                 status,
                 n,
                 err,
-                dt.datetime.utcfromtimestamp(t0),
-                dt.datetime.utcnow(),
+                dt.datetime.fromtimestamp(t0, dt.timezone.utc),
+                dt.datetime.now(dt.timezone.utc),
             )
         )
 
@@ -88,10 +90,11 @@ class PipelineRunner:
 
     def flush_audit(self) -> None:
         """Append the buffered audit rows (one tiny file per run — the
-        audit table is negligible next to fact data)."""
+        audit table is negligible next to fact data). The rows go in as a
+        JVM-side local relation, so a flush starts no Python worker."""
         if not self._audit_rows:
             return
-        df = self.spark.createDataFrame(self._audit_rows, AUDIT_SCHEMA)
+        df = local_frame(self.spark, self._audit_rows, AUDIT_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(self.audit_path)
         self._audit_rows = []
 

@@ -240,6 +240,29 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df.repartition(sc.defaultParallelism)
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small, non-empty driver-side table (tuples + DDL schema) as a
+    local relation.
+
+    `spark.createDataFrame(list, ddl)` parallelizes the rows through a
+    PythonRDD, so every action on it starts Python workers. Handing the
+    rows over as an Arrow table makes a LocalRelation built in the JVM:
+    no Python worker, one `LocalTableScan`, and real size statistics for
+    the planner. Timestamps follow Arrow's rule: naive values are UTC, so
+    pass timezone-aware datetimes."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(zip(*rows), arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 

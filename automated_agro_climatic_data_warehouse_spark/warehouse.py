@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from .functions import keys as K
 from .plans.suitability import CROPS
-from .sources import load_table
+from .sources import load_table, local_frame
 from .sources.date_dim import date_dimension
 
 
@@ -49,7 +49,8 @@ def build_dim_crop(spark: SparkSession) -> DataFrame:
          [f"https://landing.example/{c}"])
         for i, (c, tlo, thi, wlo, whi, plo, phi) in enumerate(CROPS)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "crop_key long, crop_name string, optimal_temp_min_c double, "
         "optimal_temp_max_c double, water_requirement_mm_day double, "
@@ -192,20 +193,29 @@ def compact_parquet_dir(
     read efficiency, and scan throughput dies by a thousand 2 MB files
     (driver-side listing, per-file open cost, undersized row groups).
 
-    Sizing comes from the files already on disk (sum of file lengths /
-    target, never a collect of data); partitioned tables re-write with
-    the SAME partition columns so pruning survives compaction. Returns
-    {"files_before": n, "files_after": m}.
+    The work is sized by the fragmentation, not by the table. A leaf
+    directory (one partition; the whole table when `partition_cols` is
+    empty) is fragmented when it holds more files than
+    max(1, ceil(bytes / target_file_bytes)), counted from the files on
+    disk (never a collect of data). With nothing fragmented no Spark job
+    runs and no file is touched. Otherwise only the fragmented partitions
+    are read (`basePath` keeps the partition columns) and rewritten with
+    the SAME partition columns, so pruning survives; every file of each
+    untouched partition, `.crc` sidecars included, is hard-linked into
+    the new tree instead of copied. Returns {"files_before": n,
+    "files_after": m}.
 
-    Atomicity note: local parquet has no transaction log, so the rewrite
-    lands in `path + ".compact"` and is swapped in with two renames — on
+    Atomicity note: local parquet has no transaction log, so the new tree
+    is built in `path + ".compact"` and swapped in with two renames — on
     a real deployment this is the table format's (Iceberg/Delta) rewrite
-    action and the swap is a metadata commit. Crash recovery: a leftover
-    `.old` from a run that died mid-swap still holds the complete
-    pre-compaction table, so on startup it is restored if the table dir
-    is missing, else discarded; a leftover `.compact` is always stale
-    output and removed before rewriting (previously either leftover made
-    the rename fail AFTER the expensive rewrite had already run).
+    action and the swap is a metadata commit. The table directory is not
+    modified before the swap (hard links share the data, and removing a
+    link leaves the table's name for the file in place). Crash recovery:
+    a leftover `.old` from a run that died mid-swap still holds the
+    complete pre-compaction table, so on startup it is restored if the
+    table dir is missing, else discarded; a leftover `.compact` is always
+    stale output and removed before rewriting (previously either leftover
+    made the rename fail AFTER the expensive rewrite had already run).
     """
     import glob as _glob
     import os
@@ -220,31 +230,37 @@ def compact_parquet_dir(
             os.rename(old, path)  # prior run died between the renames
     if os.path.exists(tmp):
         shutil.rmtree(tmp)  # stale output of a crashed rewrite
-    files = [
-        f
-        for f in _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    ]
-    total_bytes = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, -(-total_bytes // target_file_bytes))  # ceil
-    df = spark.read.parquet(path)
+
+    def parquet_files() -> list[str]:
+        pattern = os.path.join(path, "**", "*.parquet")
+        return [f for f in _glob.glob(pattern, recursive=True) if os.path.isfile(f)]
+
+    files = parquet_files()
+    leaves: dict[str, list[str]] = {}
+    for f in files:
+        leaves.setdefault(os.path.dirname(f) if partition_cols else path, []).append(f)
+    wanted = {
+        d: max(1, -(-sum(os.path.getsize(f) for f in fs) // target_file_bytes))  # ceil
+        for d, fs in leaves.items()
+    }
+    fragmented = [d for d, fs in leaves.items() if len(fs) > wanted[d]]
+    if not fragmented:
+        return {"files_before": len(files), "files_after": len(files)}
+    n_out = sum(wanted[d] for d in fragmented)
     if partition_cols:
         # one file per (partition, slot): repartition by the partition
         # columns so each output partition directory gets dense files
-        writer = (
-            df.repartition(int(n_out), *partition_cols)
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-        )
+        df = spark.read.option("basePath", path).parquet(*fragmented)
+        df.repartition(n_out, *partition_cols).write.partitionBy(*partition_cols).parquet(tmp)
+        for d in leaves.keys() - set(fragmented):
+            dst = os.path.join(tmp, os.path.relpath(d, path))
+            os.makedirs(dst, exist_ok=True)
+            for name in os.listdir(d):
+                if os.path.isfile(os.path.join(d, name)):
+                    os.link(os.path.join(d, name), os.path.join(dst, name))
     else:
-        writer = df.repartition(int(n_out)).write.mode("overwrite")
-    writer.parquet(tmp)
+        spark.read.parquet(path).repartition(n_out).write.parquet(tmp)
     os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old)
-    after = [
-        f
-        for f in _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    ]
-    return {"files_before": len(files), "files_after": len(after)}
+    return {"files_before": len(files), "files_after": len(parquet_files())}

@@ -6,9 +6,10 @@ drift silently.
 
 from __future__ import annotations
 
+import os
 import re
 
-COVERAGE = "/root/repo/COVERAGE.md"
+COVERAGE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "COVERAGE.md")
 
 
 def _doc():

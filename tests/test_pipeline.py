@@ -53,6 +53,34 @@ def test_runner_fail_fast_flushes_and_raises(spark):
         assert runner.read_audit().filter(F.col("status") == "FAILED").count() == 1
 
 
+def test_audit_timestamps_are_utc_instants_under_any_tz(spark):
+    """started_at/ended_at must hold the run's real instants even when the
+    Python process runs in a non-UTC zone."""
+    import os
+    import time
+
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Kolkata"  # UTC+05:30, no DST
+    time.tzset()
+    try:
+        with tempfile.TemporaryDirectory() as d:
+            runner = PipelineRunner(spark, audit_path=f"{d}/audit")
+            t0 = time.time()
+            runner.run_phase("p", lambda: spark.range(3))
+            t1 = time.time()
+            runner.flush_audit()
+            row = runner.read_audit().select(
+                F.unix_micros("started_at").alias("s"), F.unix_micros("ended_at").alias("e")
+            ).collect()[0]
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ")
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert t0 * 1e6 - 1 <= row.s <= row.e <= t1 * 1e6 + 1
+
+
 def test_mv_refresh_overwrite(spark, sf_dir):
     with tempfile.TemporaryDirectory() as d:
         mv = QUERIES["mv_compatibility"].spark_fn(spark, sf_dir)

@@ -441,8 +441,9 @@ def test_bench_history_stats_shape():
     import json
     import os
 
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
-        "bench", "/root/repo/bench.py"
+        "bench", os.path.join(root, "bench.py")
     )
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
@@ -456,7 +457,7 @@ def test_bench_history_stats_shape():
     # median must reproduce: odd/even counts both pick a real sample;
     # lines tagged "loaded": true are co-loaded runs and must be
     # skipped (r9 verdict, What's wrong #2)
-    with open("/root/repo/BENCH_FULL.jsonl") as fh:
+    with open(os.path.join(root, "BENCH_FULL.jsonl")) as fh:
         lines = [json.loads(x) for x in fh if x.strip()]
     assert any(l.get("loaded") for l in lines), (
         "the tagged co-loaded r9 line went missing — the loaded-skip "

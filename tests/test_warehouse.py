@@ -179,3 +179,94 @@ def test_compact_recovers_from_crashed_prior_run(spark, tmp_path):
     os.rename(path, path + ".old")
     stats = compact_parquet_dir(spark, path)
     assert spark.read.parquet(path).count() == 100
+
+
+def _inodes(path):
+    """{relative file path: inode} for every file under `path`, hidden
+    `.crc` sidecars included."""
+    import os
+
+    return {
+        os.path.relpath(os.path.join(d, f), path): os.stat(os.path.join(d, f)).st_ino
+        for d, _, files in os.walk(path)
+        for f in files
+    }
+
+
+def _write_parts(spark, path, parts, mode="errorifexists"):
+    """100 rows per `part` value, one file per partition directory."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    df = reduce(DataFrame.unionByName, [
+        spark.range(100).selectExpr("id", f"{p} AS part", "CAST(id AS DOUBLE) AS v")
+        for p in parts
+    ])
+    df.coalesce(1).write.mode(mode).partitionBy("part").parquet(path)
+
+
+def test_compact_already_compact_table_runs_no_job(spark, tmp_path):
+    """Nothing fragmented: no Spark job, and every file keeps its inode."""
+    from automated_agro_climatic_data_warehouse_spark.warehouse import compact_parquet_dir
+
+    path = str(tmp_path / "t")
+    _write_parts(spark, path, [0, 1, 2, 3])
+    before = _inodes(path)
+    tracker = spark.sparkContext.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup(None))
+    stats = compact_parquet_dir(spark, path, partition_cols=["part"])
+    assert set(tracker.getJobIdsForGroup(None)) == jobs
+    assert stats == {"files_before": 4, "files_after": 4}
+    assert _inodes(path) == before
+
+
+def test_compact_rewrites_only_the_fragmented_partition(spark, tmp_path):
+    """One partition with two files among four: only its files get new
+    inodes; rows, sums and partition pruning survive."""
+    import os
+
+    from automated_agro_climatic_data_warehouse_spark.warehouse import compact_parquet_dir
+
+    path = str(tmp_path / "t")
+    _write_parts(spark, path, [0, 1, 2, 3])
+    _write_parts(spark, path, [2], mode="append")  # part=2 now holds two files
+    before = spark.read.parquet(path)
+    n_before, chk = before.count(), before.agg({"v": "sum"}).collect()[0][0]
+    inodes = _inodes(path)
+
+    stats = compact_parquet_dir(spark, path, partition_cols=["part"])
+    assert stats == {"files_before": 5, "files_after": 4}
+    after_inodes = _inodes(path)
+    for part in (0, 1, 3):  # untouched: same names, same inodes, .crc too
+        old = {f: i for f, i in inodes.items() if f.startswith(f"part={part}{os.sep}")}
+        assert len(old) == 2
+        assert {f: after_inodes[f] for f in old} == old
+    fresh = [i for f, i in after_inodes.items() if f.startswith(f"part=2{os.sep}")]
+    assert fresh and not set(fresh) & set(inodes.values())
+
+    after = spark.read.parquet(path)
+    assert after.count() == n_before
+    assert after.agg({"v": "sum"}).collect()[0][0] == chk
+    assert after.filter("part = 2").count() == 200
+    plan = after.filter("part = 2")._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [" in plan
+
+
+def test_compact_discards_leftover_hard_links(spark, tmp_path):
+    """A crashed run can leave a `.compact` tree of hard links into the
+    table; removing it must leave the table's files intact."""
+    import os
+
+    from automated_agro_climatic_data_warehouse_spark.warehouse import compact_parquet_dir
+
+    path = str(tmp_path / "t")
+    _write_parts(spark, path, [0, 1])
+    before = _inodes(path)
+    for rel in before:
+        os.makedirs(os.path.dirname(os.path.join(path + ".compact", rel)), exist_ok=True)
+        os.link(os.path.join(path, rel), os.path.join(path + ".compact", rel))
+    compact_parquet_dir(spark, path, partition_cols=["part"])
+    assert not os.path.exists(path + ".compact")
+    assert _inodes(path) == before
+    assert spark.read.parquet(path).count() == 200

@@ -5,10 +5,12 @@ Usage: python tools/check.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))  # the checkout
+sys.path.insert(0, ROOT)
 
 from automated_agro_climatic_data_warehouse_spark.oracle import compare, duckdb_conn  # noqa: E402
 from automated_agro_climatic_data_warehouse_spark.plans import QUERIES  # noqa: E402
@@ -86,7 +88,7 @@ if __name__ == "__main__":
         import importlib.util
 
         spec = importlib.util.spec_from_file_location(
-            "__spark_entry__", "/root/repo/__spark_entry__.py"
+            "__spark_entry__", os.path.join(ROOT, "__spark_entry__.py")
         )
         mod = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(mod)

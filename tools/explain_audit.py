@@ -7,10 +7,12 @@ Usage: python tools/explain_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))  # the checkout
+sys.path.insert(0, ROOT)
 
 from automated_agro_climatic_data_warehouse_spark.plans import QUERIES  # noqa: E402
 from automated_agro_climatic_data_warehouse_spark.session import get_spark  # noqa: E402
@@ -158,7 +160,7 @@ def main() -> None:
             "```",
             "",
         ]
-    with open("/root/repo/EXPLAINS.md", "w") as f:
+    with open(os.path.join(ROOT, "EXPLAINS.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"wrote EXPLAINS.md ({len(AUDITED)} plans)")
 

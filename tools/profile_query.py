@@ -17,7 +17,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))  # the checkout
+sys.path.insert(0, ROOT)
 
 EVDIR = "/tmp/spark-events-profile"
 

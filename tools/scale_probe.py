@@ -16,7 +16,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))  # the checkout
+sys.path.insert(0, ROOT)
 
 os.environ.setdefault("SPARK_GRAFT_DEDUP_HASH", "xxhash64")
 
@@ -326,7 +327,7 @@ def main() -> None:
             f"| {t1 / t0:.1f}x | {t2 / t1:.1f}x |"
         )
     lines.append("")
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(ROOT, "SCALING.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"wrote SCALING.md ({len(PROBED)} queries)")
 
