@@ -373,13 +373,17 @@ def main() -> None:
 
     for df in load_tables(spark, sf_dir).values():
         df.count()
-    # (b) JVM JIT + whole-stage-codegen compilation of every headline plan
-    #     shape, plus the Python/Arrow worker pool: run each query once on
-    #     the tiny sf0.001 tables (1/100 of the benched data — negligible
-    #     data work, identical plan shapes). Measured: the first execution
-    #     of a complex multi-stage shape costs 3-5× its steady state purely
-    #     in compilation/JIT, e.g. dedup_minhash_lsh 17s cold vs 4s warm
-    #     at sf0.1.
+    # (b) JVM JIT of the engine's code paths plus the Python/Arrow worker
+    #     pool: run each query once on the tiny sf0.001 tables (1/100 of
+    #     the benched data — negligible data work, identical plan shapes).
+    #     Measured: the first execution of a complex multi-stage shape
+    #     costs 3-5× its steady state purely in compilation/JIT, e.g.
+    #     dedup_minhash_lsh 17s cold vs 4s warm at sf0.1. The warm pass
+    #     does not leave the generated classes compiled: it compiles 2383
+    #     classes, the session's codegen cache holds 1000 (session.py),
+    #     and a second pass over the same queries compiled 2212 again
+    #     (sf0.001, 4 cores), so most queries compile theirs again when
+    #     timed.
     warm_dir = "/root/testdata/sf0.001"
     warm_dir = warm_dir if os.path.isdir(warm_dir) else sf_dir
     for name in names:

@@ -1,7 +1,9 @@
 """Per-job/per-stage profile of one registry query (guide §1: measure
 first). Runs the query at $SPARK_GRAFT_SF_DIR with the event log on,
 then parses the log to attribute wall-clock to jobs and stages —
-the local[N] stand-in for the Spark UI's stage page.
+the local[N] stand-in for the Spark UI's stage page. Each query's header
+also gives the classes Janino compiled during its timed run, so a codegen
+cache that thrashes shows up here.
 
 Usage: python tools/profile_query.py <query> [more queries...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
@@ -14,6 +16,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shlex
 import sys
 import time
 
@@ -26,78 +29,52 @@ EVDIR = "/tmp/spark-events-profile"
 def get_profiling_spark():
     import shutil
 
+    from automated_agro_climatic_data_warehouse_spark.session import get_spark
+
     shutil.rmtree(EVDIR, ignore_errors=True)
     os.makedirs(EVDIR, exist_ok=True)
     os.environ.setdefault("SPARK_GRAFT_DEDUP_HASH", "xxhash64")
-    from automated_agro_climatic_data_warehouse_spark.session import get_spark
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    from pyspark.sql import SparkSession
-
-    builder_patch = {
-        "spark.eventLog.enabled": "true",
-        "spark.eventLog.dir": EVDIR,
-    }
-    # reuse the factory's config by building through it, then asserting the
-    # event log landed (getOrCreate would ignore new confs on a live session)
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    os.environ["_PROFILE_EXTRA"] = json.dumps(builder_patch)
-    import automated_agro_climatic_data_warehouse_spark.session as sess
-
-    orig = sess.get_spark
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", EVDIR)
-        # this box has no zstd binary/module to read a compressed log back
-        .config("spark.eventLog.compress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-    _ = orig  # keep the factory import alive for parity of confs
-    return spark
+    # the event log is a deployment setting, passed to the JVM the factory
+    # launches; report() reads it back as plain JSON lines
+    os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join([
+        "--conf", "spark.eventLog.enabled=true",
+        "--conf", f"spark.eventLog.dir=file://{EVDIR}",
+        "--conf", "spark.eventLog.compress=false",
+        "pyspark-shell",
+    ])
+    return get_spark("profile")
 
 
 def profile(names: list[str]) -> None:
     from automated_agro_climatic_data_warehouse_spark.plans import QUERIES
     from automated_agro_climatic_data_warehouse_spark.session import (
+        codegen_compiles,
         drop_checkpoint_blocks,
     )
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_profiling_spark()
     warm_dir = "/root/testdata/sf0.001"
+    compiles: dict[str, int] = {}
     for name in names:
         if os.environ.get("PROFILE_WARM", "1") != "0":
             QUERIES[name].spark_fn(spark, warm_dir).count()
             drop_checkpoint_blocks(spark)
         spark.sparkContext.setJobDescription(f"TIMED::{name}")
+        c0 = codegen_compiles(spark)
         t0 = time.time()
         n = QUERIES[name].spark_fn(spark, sf_dir).count()
         wall = time.time() - t0
+        compiles[name] = codegen_compiles(spark) - c0
         spark.sparkContext.setJobDescription(None)
         drop_checkpoint_blocks(spark)
         print(f"\n=== {name}: {n} rows, wall {wall:.2f}s ===")
     spark.stop()
     time.sleep(1.0)
-    report(names)
+    report(names, compiles)
 
 
-def report(names: list[str]) -> None:
+def report(names: list[str], compiles: dict[str, int]) -> None:
     logs = glob.glob(EVDIR + "/*")
     assert logs, "no event log written"
     path = max(logs, key=os.path.getmtime)
@@ -107,17 +84,7 @@ def report(names: list[str]) -> None:
         path = max(inner, key=os.path.getmtime)
     jobs: dict[int, dict] = {}
     stages: dict[int, dict] = {}
-    if path.endswith(".zstd"):
-        import io
-        import subprocess
-
-        raw_bytes = subprocess.run(
-            ["zstd", "-dc", path], capture_output=True, check=True
-        ).stdout
-        fh_ctx = io.StringIO(raw_bytes.decode("utf-8", "replace"))
-    else:
-        fh_ctx = open(path)
-    with fh_ctx as fh:
+    with open(path) as fh:
         for raw in fh:
             try:
                 ev = json.loads(raw)
@@ -152,7 +119,8 @@ def report(names: list[str]) -> None:
             j for j in jobs.values() if j.get("desc") == f"TIMED::{name}"
         ]
         total_ms = sum(j.get("t1", j["t0"]) - j["t0"] for j in tagged)
-        print(f"\n##### {name}: {len(tagged)} jobs, {total_ms/1000:.2f}s in jobs")
+        print(f"\n##### {name}: {len(tagged)} jobs, {total_ms/1000:.2f}s in jobs, "
+              f"{compiles[name]} classes compiled")
         for j in sorted(tagged, key=lambda j: j["t0"]):
             dur = (j.get("t1", j["t0"]) - j["t0"]) / 1000
             sts = [
